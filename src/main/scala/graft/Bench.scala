@@ -7,15 +7,16 @@ import graft.query.Searcher
 /** Benchmark main — prints ONE JSON line with:
   *  - `value` / `queries`: per-query wall seconds for the headline query set
   *    over the SPARK_GRAFT_SF_DIR documents index (driver-facing numbers);
-  *  - `build_files_per_sec_8` / `_32` + `scaling_efficiency`: the north-rule
+  *  - `build_files_per_sec_n` / `_4n` + `scaling_efficiency`: the north-rule
   *    scaling evidence — the SAME deterministic CorpusGen index build run at
-  *    local[8] and local[32] (N vs 4N cores); efficiency = T8 / (4 * T32);
+  *    N = 4 and 4N = 16 executors (SPARK_GRAFT_CPUS_LOW / _HIGH);
+  *    efficiency = files/s at 4N / (4 * files/s at N);
   *  - `p50_query_ms` / `p95_query_ms`: repeated-run latency of the
   *    search-benchmark-game-style query set (term / intersection /
   *    disjunction / phrase top-k) against the warm index.
   *
   * Env knobs: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_BENCH_DOCS
-  * (CorpusGen corpus size, default 4800000), SPARK_GRAFT_SCALING=0 to skip
+  * (CorpusGen corpus size, default 4200000), SPARK_GRAFT_SCALING=0 to skip
   * the two-level scaling phase (local iteration),
   * SPARK_GRAFT_BENCH_BUDGET_SEC (default 3000) — the HARD wall-clock budget:
   * the adaptive scaling loop stops when the next rep's predicted cost no

@@ -380,9 +380,13 @@ object Engine {
     * asserts and the `ft_batch_topk` oracle replays in DuckDB.
     *
     * Output: (qid STRING, doc_id BIGINT, score DOUBLE), ordered
-    * (qid, score desc, doc_id), at most k rows per qid.
+    * (qid, score desc, doc_id), at most k rows per qid. Qids must be
+    * distinct: two entries sharing one would silently merge into a single
+    * disjunction.
     */
   def topKBatchF64(sr: Searcher, queries: Seq[(String, Seq[String])], k: Int): DataFrame = {
+    val dupQids = queries.map(_._1).diff(queries.map(_._1).distinct).distinct
+    require(dupQids.isEmpty, s"topKBatchF64: duplicate qids ${dupQids.mkString(", ")}")
     val spark = sr.spark
     import spark.implicits._
     val qt = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }

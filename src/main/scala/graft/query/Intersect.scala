@@ -93,10 +93,8 @@ object Intersect {
     */
   private final val RARE_BROADCAST_MAX_DF: Long = 1L << 16
 
-  /** First index in the sorted array with value >= target (shared by both
-    * executors' chunk slicing — Wand.multiTerm calls it too).
-    */
-  private[query] def lowerBound(a: Array[Int], target: Long): Int = {
+  /** First index in the sorted array with value >= target. */
+  private def lowerBound(a: Array[Int], target: Long): Int = {
     var lo = 0; var hi = a.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
@@ -104,6 +102,22 @@ object Intersect {
     }
     lo
   }
+
+  /** The docId-range chunks of `chunkDocs` docs that a block's sorted
+    * docIds span, as (chunk, from, until) index ranges into `ds` — one
+    * slicing semantics for both executors (Wand.multiTerm slices here too).
+    * The common case, a block inside one chunk, is (chunk, 0, ds.length).
+    */
+  private[query] def chunkSpans(ds: Array[Int], chunkDocs: Int): Iterator[(Int, Int, Int)] =
+    if (ds.isEmpty) Iterator.empty
+    else {
+      val lo = ds(0) / chunkDocs
+      val hi = ds(ds.length - 1) / chunkDocs
+      if (lo == hi) Iterator.single((lo, 0, ds.length))
+      else (lo to hi).iterator
+        .map(c => (c, lowerBound(ds, c.toLong * chunkDocs), lowerBound(ds, (c + 1).toLong * chunkDocs)))
+        .filter(span => span._2 < span._3)
+    }
 
   /** Slice block rows into docId-range chunks of `chunkDocs` docs, keyed
     * (segId, chunk) — same soundness argument as the WAND executor's
@@ -120,30 +134,17 @@ object Intersect {
     import rows.sparkSession.implicits._
     val cw = chunkDocs
     rows.flatMap { case (segId, term, blockId, ds, tfs, ns, pf, pl) =>
-      if (ds.isEmpty) Iterator.empty
-      else {
-        val lo = ds(0) / cw
-        val hi = ds(ds.length - 1) / cw
-        if (lo == hi) Iterator.single((segId, lo, term, blockId, ds, tfs, ns, pf, pl))
+      // CSR prefix offsets, only for a straddling block (rare case)
+      lazy val off = pl.scanLeft(0)(_ + _)
+      chunkSpans(ds, cw).map { case (c, from, until) =>
+        if (from == 0 && until == ds.length) (segId, c, term, blockId, ds, tfs, ns, pf, pl)
         else {
-          // CSR prefix offsets once per straddling block (rare case)
-          val off = new Array[Int](pl.length + 1)
-          var i = 0
-          while (i < pl.length) { off(i + 1) = off(i) + pl(i); i += 1 }
-          (lo to hi).iterator.flatMap { c =>
-            val from = lowerBound(ds, c.toLong * cw)
-            val until = lowerBound(ds, (c + 1).toLong * cw)
-            if (from == until) Iterator.empty
-            else {
-              import java.util.Arrays.copyOfRange
-              val (pf2, pl2) =
-                if (pl.isEmpty) (Array.emptyIntArray, Array.emptyIntArray)
-                else (copyOfRange(pf, off(from), off(until)), copyOfRange(pl, from, until))
-              Iterator.single((segId, c, term, blockId,
-                copyOfRange(ds, from, until), copyOfRange(tfs, from, until),
-                copyOfRange(ns, from, until), pf2, pl2))
-            }
-          }
+          import java.util.Arrays.copyOfRange
+          val (pf2, pl2) =
+            if (pl.isEmpty) (Array.emptyIntArray, Array.emptyIntArray)
+            else (copyOfRange(pf, off(from), off(until)), copyOfRange(pl, from, until))
+          (segId, c, term, blockId, copyOfRange(ds, from, until),
+            copyOfRange(tfs, from, until), copyOfRange(ns, from, until), pf2, pl2)
         }
       }
     }
@@ -165,15 +166,20 @@ object Intersect {
   private def mapSegments[R: org.apache.spark.sql.Encoder](
       searcher: Searcher, ordered: Seq[String], dfs: Map[String, Long],
       needPositions: Boolean,
-      chunkDocs: Int = Wand.DefaultChunkDocs)(f: (Int, Map[String, TermPostings]) => R): Array[R] = {
+      chunkDocs: Int)(f: (Int, Array[TermPostings]) => R): Array[R] = {
     import searcher.spark.implicits._
+    val terms = ordered.toArray
+    // the task's lists in `ordered` order; a term absent from the chunk is empty
+    def lists(byTerm: Map[String, TermPostings]): Array[TermPostings] =
+      terms.map(t => byTerm.getOrElse(t,
+        new TermPostings(Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)))
     val rare = ordered.head
     val useBc = ordered.length > 1 && dfs(rare) <= RARE_BROADCAST_MAX_DF &&
       ordered.tail.map(dfs).sum > 4 * dfs(rare)
     if (!useBc) {
       chunkRows(collectSegments(searcher, ordered, needPositions), chunkDocs)
         .groupByKey(r => (r._1, r._2))
-        .mapGroups { (key, it) => f(key._1, assembleChunk(it, needPositions)) }
+        .mapGroups { (key, it) => f(key._1, lists(assembleChunk(it, needPositions))) }
         .collect()
     } else {
       val spark = searcher.spark
@@ -202,7 +208,7 @@ object Intersect {
         .groupByKey(r => (r._1, r._2))
         .mapGroups { (key, it) =>
           val (d, t, n, pf, po) = rareB.value(key._1)
-          f(key._1, assembleChunk(it, needPositions) + (rareName -> new TermPostings(d, t, n, pf, po)))
+          f(key._1, lists(assembleChunk(it, needPositions) + (rareName -> new TermPostings(d, t, n, pf, po))))
         }
         .collect()
       // segments where the rare term matched but NO other-term block survived
@@ -265,15 +271,11 @@ object Intersect {
     val ordIdx = ordered.zipWithIndex.toMap
     val clauseIdx = clauseTerms.map(ordIdx).toArray
     val wB = spark.sparkContext.broadcast(ordered.map(weights).toArray)
-    val orderedB = spark.sparkContext.broadcast(ordered.toArray)
 
     val fruits = mapSegments(searcher, ordered, dfs, needPositions = false, chunkDocs) {
-      (segId, byTerm) =>
+      (segId, lists) =>
         val ws = wB.value
-        val lists = orderedB.value.map(t =>
-          byTerm.getOrElse(t,
-            new TermPostings(Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)))
-        val topk = new Wand.TopK(k, segId)
+        val topk = new Wand.TopK(k)
         var cnt = 0L
         leapfrog(lists) { (doc, idx) =>
           val normId = lists(0).normIds(idx(0))
@@ -285,13 +287,13 @@ object Intersect {
             c += 1
           }
           cnt += 1
-          topk.insert(doc, score)
+          topk.insert(segId, doc, score)
           ()
         }
-        (topk.hits.toSeq.map(h => (h.segId, h.docId, h.score)), cnt)
+        (topk.hits, cnt)
     }
 
-    merge(fruits, k)
+    Wand.TopK.merge(fruits, k)
   }
 
   /** Phrase top-k + count in one pass: leapfrog intersection, then the
@@ -314,16 +316,12 @@ object Intersect {
     val slotIdx = p.terms.map { case (_, t) => ordIdx(t) }.toArray
     val offsets = p.terms.map(_._1).toArray
     val slop = p.slop
-    val orderedB = spark.sparkContext.broadcast(ordered.toArray)
     val weightB = spark.sparkContext.broadcast(weight)
 
     val fruits = mapSegments(searcher, ordered, dfs, needPositions = true, chunkDocs) {
-      (segId, byTerm) =>
-        val lists = orderedB.value.map(t =>
-          byTerm.getOrElse(t,
-            new TermPostings(Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)))
+      (segId, lists) =>
         val w = weightB.value
-        val topk = new Wand.TopK(k, segId)
+        val topk = new Wand.TopK(k)
         var cnt = 0L
         val flats = new Array[Array[Int]](slotIdx.length)
         val starts = new Array[Int](slotIdx.length)
@@ -339,21 +337,13 @@ object Intersect {
           val c = PhraseMatcher.phraseCountCsr(offsets, flats, starts, ends, slop)
           if (c > 0) {
             cnt += 1
-            topk.insert(doc, w.score(lists(0).normIds(idx(0)), c.toLong))
+            topk.insert(segId, doc, w.score(lists(0).normIds(idx(0)), c.toLong))
             ()
           }
         }
-        (topk.hits.toSeq.map(h => (h.segId, h.docId, h.score)), cnt)
+        (topk.hits, cnt)
     }
 
-    merge(fruits, k)
-  }
-
-  private def merge(fruits: Array[(Seq[(Int, Int, Float)], Long)], k: Int): (Array[Hit], Long) = {
-    val hits = fruits.flatMap(_._1)
-      .map { case (s, d, sc) => Hit(s, d, sc) }
-      .sortBy(h => (-h.score, h.segId, h.docId))
-      .take(k)
-    (hits, fruits.map(_._2).sum)
+    Wand.TopK.merge(fruits, k)
   }
 }

@@ -7,6 +7,23 @@ import graft.score.Bm25
 final case class ScoredDoc(segId: Int, docId: Int, score: Float)
 final case class Hit(segId: Int, docId: Int, score: Float)
 
+object Hit {
+  /** The collector order (`top_collector.rs:45-61`): score desc, then segId
+    * asc, docId asc. Every per-segment heap and every driver merge ranks by it.
+    */
+  implicit val ordering: Ordering[Hit] = (a: Hit, b: Hit) => compare(a.score, a.segId, a.docId, b)
+
+  /** [[ordering]] with the left hit as raw fields, so a heap can test a
+    * candidate without allocating it.
+    */
+  def compare(score: Float, segId: Int, docId: Int, h: Hit): Int = {
+    val c = java.lang.Float.compare(h.score, score)
+    if (c != 0) c
+    else if (segId != h.segId) Integer.compare(segId, h.segId)
+    else Integer.compare(docId, h.docId)
+  }
+}
+
 /** A pinned view over one committed index (the reference `Searcher`,
   * `src/core/searcher.rs`): global BM25 statistics are summed across
   * segments (`bm25.rs:25-48`) on the driver — a tiny metadata job — and the
@@ -21,6 +38,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
                val store: graft.index.SegmentStore = null)
     extends graft.score.Bm25StatisticsProvider {
   import spark.implicits._
+  import Searcher.{Collector, Route}
 
   /** The storage seam (SURVEY §7): all component reads resolve through a
     * [[graft.index.SegmentStore]]; default = the builder's Parquet layout.
@@ -406,16 +424,12 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       // term, so idf = idf(0, N) per slot.
       require(indexMeta.forall(_.withPositions),
         s"regex-phrase query needs positions, but the index at $indexDir was built with withPositions=false")
-      val slotTerms: Seq[Seq[String]] = rp.terms.map { case (_, pat) =>
-        // whole-term match, like RegexQ (tantivy_fst anchors implicitly)
-        allTermsFor(fld).where(regexp_like($"term", lit(Searcher.anchored(pat))))
-          .orderBy($"term").limit(rp.maxExpansions).as[String].collect().toSeq
-      }
+      val slotTerms = rp.terms.map { case (_, pat) => regexExpansions(pat, rp.maxExpansions, fld) }
       val patDfs = docFreqs(rp.terms.map(_._2), fld)
       val rpWeight = Bm25.forTerms(rp.terms.map(t => patDfs.getOrElse(t._2, 0L)),
         fieldStats(fld)._2, avgFieldnormFor(fld))
-      slotPhraseDocs(slotTerms, rp.terms.map(_._1).toArray, rp.slop, fld,
-        weight = Some(rpWeight))
+      scoreSlotPhrase(slotPhraseCounts(slotTerms, rp.terms.map(_._1).toArray, rp.slop,
+        fld = fld), Some(rpWeight))
     case pp: PhrasePrefixQ =>
       // expand the prefix against the term dictionary in ascending term
       // order, capped at maxExpansions (`phrase_prefix_query.rs`), then run
@@ -433,17 +447,15 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       // the prefix term).
       require(indexMeta.forall(_.withPositions),
         s"phrase-prefix query needs positions, but the index at $indexDir was built with withPositions=false")
-      val expansions = allTermsFor(fld)
-        .where($"term".startsWith(pp.prefix._2))
-        .orderBy($"term").limit(pp.maxExpansions).as[String].collect()
+      val expansions = prefixExpansions(pp.prefix._2, pp.maxExpansions, fld)
       if (expansions.isEmpty) spark.emptyDataset[ScoredDoc]
       else if (pp.terms.length <= 1) {
         // 0 fixed terms = the parser's bare `term*` (reference falls back
         // to a const-score range weight); 1 fixed term = the SinglePrefix
         // scorer, whose score is const 1.0 (`phrase_prefix_scorer.rs:84-88`)
-        val slots = pp.terms.map(t => Seq(t._2)) :+ expansions.toSeq
+        val slots = pp.terms.map(t => Seq(t._2)) :+ expansions
         val offsets = (pp.terms.map(_._1) :+ pp.prefix._1).toArray
-        slotPhraseDocs(slots, offsets, slop = 0, fld)
+        scoreSlotPhrase(slotPhraseCounts(slots, offsets, slop = 0, fld = fld), None)
       } else {
         val fixedTerms = pp.terms.map(_._2)
         val dfs = docFreqs(fixedTerms.distinct, fld)
@@ -452,9 +464,9 @@ class Searcher(val spark: SparkSession, val indexDir: String,
         else {
           val ppWeight = Bm25.forTerms(fixedTerms.map(dfs),
             fieldStats(fld)._2, avgFieldnormFor(fld))
-          slotPhraseDocs(pp.terms.map(t => Seq(t._2)), pp.terms.map(_._1).toArray,
-            slop = 0, fld, weight = Some(ppWeight),
-            prefix = Some((pp.prefix._1, expansions.toSeq)))
+          scoreSlotPhrase(slotPhraseCounts(pp.terms.map(t => Seq(t._2)),
+            pp.terms.map(_._1).toArray, slop = 0,
+            prefix = Some((pp.prefix._1, expansions)), fld = fld), Some(ppWeight))
         }
       }
     case b: BoolQ => compileBool(b, fld)
@@ -523,25 +535,25 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       .take(maxTerms + 1)
   }
 
-  /** Shared executor for phrase queries whose slots are TERM SETS (regex
-    * phrase, phrase prefix): one pruned postings scan over all matched
-    * terms, one (segId, docId) shuffle, per-slot position unions merged and
-    * fed to the phrase matcher.
+  /** The slot-phrase kernel for phrase queries whose slots are TERM SETS
+    * (regex phrase, phrase prefix): one pruned postings scan over all
+    * matched terms, one (segId, docId) shuffle, per-slot position unions
+    * merged and fed to the phrase matcher. Returns (segId, docId, normId,
+    * cnt) for docs whose slot unions satisfy the phrase; cnt is the tf the
+    * scored twins feed to BM25 (`phrase_scorer.rs:551-556` over union
+    * postings — [[scoreSlotPhrase]] in f32, the F64 oracle twins in double).
     *
-    * With `weight` set, scores BM25 with tf = the slot-phrase count
-    * (`phrase_scorer.rs:551-556` over union postings); otherwise const 1.0.
     * With `prefix` set (phrase-prefix MultiPrefix shape,
     * `phrase_prefix_scorer.rs:159-176`), a doc additionally needs some
     * phrase start `base` whose prefix position `base + prefixOffset` is
     * held by an expansion term — the prefix gates matching but does NOT
-    * contribute to the scored count.
+    * contribute to cnt, which is then the FIXED-phrase count.
     */
-  private def slotPhraseDocs(slotTerms: Seq[Seq[String]], offsets: Array[Int],
-                             slop: Int, fld: String,
-                             weight: Option[Bm25.Weight] = None,
-                             prefix: Option[(Int, Seq[String])] = None): Dataset[ScoredDoc] = {
+  def slotPhraseCounts(slotTerms: Seq[Seq[String]], offsets: Array[Int],
+                       slop: Int, prefix: Option[(Int, Seq[String])] = None,
+                       fld: String = field): DataFrame = {
     if (slotTerms.exists(_.isEmpty) || prefix.exists(_._2.isEmpty))
-      return spark.emptyDataset[ScoredDoc]
+      return Seq.empty[(Int, Int, Int, Int)].toDF("segId", "docId", "normId", "cnt")
     val nSlots = offsets.length
     // term -> slots it can fill (a term may match several slots); the
     // prefix expansion set, when present, is slot index nSlots
@@ -570,66 +582,29 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       if (bySlot.exists(_.isEmpty)) Iterator.empty
       else {
         val arrays = bySlot.map(_.distinct.sorted.toArray)
-        val phraseArrays = arrays.take(nSlots)
-        if (prefix.isDefined) {
-          val (count, extended) = PhraseMatcher.prefixGatedCount(
-            offsets, phraseArrays, prefixOff, arrays(nSlots))
-          if (!extended) Iterator.empty
-          else Iterator.single(ScoredDoc(key._1, key._2,
-            weight.map(_.score(normId, count.toLong)).getOrElse(1.0f)))
-        } else {
-          val count = PhraseMatcher.phraseCount(offsets, phraseArrays, slop)
-          if (count > 0)
-            Iterator.single(ScoredDoc(key._1, key._2,
-              weight.map(_.score(normId, count.toLong)).getOrElse(1.0f)))
-          else Iterator.empty
-        }
+        val (count, matched) =
+          if (prefix.isDefined)
+            PhraseMatcher.prefixGatedCount(offsets, arrays.take(nSlots), prefixOff, arrays(nSlots))
+          else {
+            val c = PhraseMatcher.phraseCount(offsets, arrays.take(nSlots), slop)
+            (c, c > 0)
+          }
+        if (matched) Iterator.single((key._1, key._2, normId, count)) else Iterator.empty
       }
-    }
+    }.toDF("segId", "docId", "normId", "cnt")
   }
 
-  /** Per-doc slot-union phrase counts, unscored — the building block the
-    * F64 oracle twins share with the f32 path: (segId, docId, cnt) for docs
-    * whose slot unions satisfy the phrase (and, when `prefix` is set, whose
-    * match extends with a prefix expansion; cnt is then the FIXED-phrase
-    * count, `phrase_prefix_scorer.rs:159-176`).
+  /** f32 scores for [[slotPhraseCounts]] rows: BM25 with tf = cnt under
+    * `weight`, or const 1.0 without one.
     */
-  def slotPhraseCounts(slotTerms: Seq[Seq[String]], offsets: Array[Int],
-                       slop: Int, prefix: Option[(Int, Seq[String])] = None,
-                       fld: String = field): DataFrame = {
-    if (slotTerms.exists(_.isEmpty) || prefix.exists(_._2.isEmpty))
-      return Seq.empty[(Int, Int, Int)].toDF("segId", "docId", "cnt")
-    val nSlots = offsets.length
-    val termSlots: Map[String, Seq[Int]] = (slotTerms.zipWithIndex
-      .flatMap { case (ts, i) => ts.map(t => (t, i)) } ++
-      prefix.toSeq.flatMap { case (_, ts) => ts.map(t => (t, nSlots)) })
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val prefixOff = prefix.map(_._1).getOrElse(-1)
-    val nBuckets = if (prefix.isDefined) nSlots + 1 else nSlots
-    val allMatched = termSlots.keys.toSeq.sorted
-    val rows = postings
-      .where($"field" === fld && $"term".isin(allMatched: _*))
-      .select($"segId", $"term", explode(arrays_zip($"docIds", $"positions")).as("p"))
-      .select($"segId", $"term", $"p.docIds".as("docId"), $"p.positions".as("positions"))
-      .as[(Int, String, Int, Array[Int])]
-    rows.groupByKey(r => (r._1, r._3)).flatMapGroups { (key, it) =>
-      val bySlot = Array.fill(nBuckets)(scala.collection.mutable.ArrayBuffer.empty[Int])
-      it.foreach { case (_, term, _, pos) =>
-        termSlots.getOrElse(term, Seq.empty).foreach(i => bySlot(i) ++= pos)
-      }
-      if (bySlot.exists(_.isEmpty)) Iterator.empty
-      else {
-        val arrays = bySlot.map(_.distinct.sorted.toArray)
-        if (prefix.isDefined) {
-          val (count, extended) = PhraseMatcher.prefixGatedCount(
-            offsets, arrays.take(nSlots), prefixOff, arrays(nSlots))
-          if (extended) Iterator.single((key._1, key._2, count)) else Iterator.empty
-        } else {
-          val count = PhraseMatcher.phraseCount(offsets, arrays.take(nSlots), slop)
-          if (count > 0) Iterator.single((key._1, key._2, count)) else Iterator.empty
-        }
-      }
-    }.toDF("segId", "docId", "cnt")
+  private def scoreSlotPhrase(counts: DataFrame, weight: Option[Bm25.Weight]): Dataset[ScoredDoc] = {
+    val score = weight match {
+      case Some(w) =>
+        val scoreU = udf((normId: Int, cnt: Int) => w.score(normId, cnt.toLong))
+        scoreU($"normId", $"cnt")
+      case None => lit(1.0f)
+    }
+    counts.select($"segId", $"docId", score.as("score")).as[ScoredDoc]
   }
 
   /** Prefix expansions from the term dictionary, ascending, capped
@@ -665,6 +640,14 @@ class Searcher(val spark: SparkSession, val indexDir: String,
                     else math.max(b.minShouldMatch, 1)
     // more required Shoulds than Should clauses matches nothing
     if (minShould > numShoulds) return spark.emptyDataset[ScoredDoc]
+    // the MustNot clauses' docs leave through one anti-join
+    def withoutNegatives(positive: Dataset[ScoredDoc]): Dataset[ScoredDoc] =
+      if (negatives.isEmpty) positive
+      else {
+        val neg = negatives.map(q => compileRaw(q, fld)).reduceLeft(_ union _)
+          .select($"segId", $"docId").distinct()
+        positive.join(neg, Seq("segId", "docId"), "left_anti").as[ScoredDoc]
+      }
 
     // Term-with-boost leaves collapse into ONE postings scan (boosts fold
     // into the per-term weight, `bm25.rs:80-87`). Duplicate terms carrying
@@ -696,14 +679,8 @@ class Searcher(val spark: SparkSession, val indexDir: String,
         joined = joined.join(frame(t, i + 1), Seq("segId", "docId"))
       val scIdx: Map[String, Int] = ordered.zipWithIndex.toMap
       val sumCol = clauseTerms.map(t => col(s"sc${scIdx(t)}")).reduceLeft(_ + _)
-      val positive = joined
-        .select($"segId", $"docId", sumCol.as("score")).as[ScoredDoc]
-      return (if (negatives.isEmpty) positive
-      else {
-        val neg = negatives.map(q => compileRaw(q, fld)).reduceLeft(_ union _)
-          .select($"segId", $"docId").distinct()
-        positive.join(neg, Seq("segId", "docId"), "left_anti").as[ScoredDoc]
-      })
+      return withoutNegatives(
+        joined.select($"segId", $"docId", sumCol.as("score")).as[ScoredDoc])
     }
 
     val tagged: Dataset[(Int, Int, Int, Boolean, Float)] =
@@ -732,12 +709,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       if (ok) Iterator.single(ScoredDoc(key._1, key._2, sc)) else Iterator.empty
     }
 
-    if (negatives.isEmpty) combined
-    else {
-      val neg = negatives.map(q => compileRaw(q, fld)).reduceLeft(_ union _)
-        .select($"segId", $"docId").distinct()
-      combined.join(neg, Seq("segId", "docId"), "left_anti").as[ScoredDoc]
-    }
+    withoutNegatives(combined)
   }
 
   /** Phrase matching (`phrase_query.rs`, `phrase_scorer.rs:82-143`): docs
@@ -794,19 +766,6 @@ class Searcher(val spark: SparkSession, val indexDir: String,
 
   // ---------- collectors ----------
 
-  /** Pure all-Must all-TermQ conjunction — the shape the leapfrog executor
-    * specializes (fast path only valid with no tombstones pinned, since
-    * `Intersect` reads postings directly).
-    */
-  private def pureMustTerms(q: Query): Option[Seq[String]] = q match {
-    case BoolQ(cs, _) if cs.nonEmpty && cs.forall {
-        case (o, s) => o == Occur.Must && s.isInstanceOf[TermQ] } =>
-      Some(cs.map(_._2.asInstanceOf[TermQ].term))
-    case _ => None
-  }
-
-  private def fastPathEligible: Boolean = deletesDf.isEmpty
-
   /** A clause that scores like a single TermScorer: a bare TermQ, or a
     * BoostQ chain over one — boosts fold multiplicatively into the weight
     * (`bm25.rs:80-87 boost_by`; eligibility `boolean_weight.rs:56-76`).
@@ -818,120 +777,98 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       case _ => None
     }
 
-  /** Pure weighted multi-term disjunction — the WAND-eligible shape
-    * (`boolean_weight.rs:56-76`: every clause a TermScorer reading freqs;
-    * a BoostQ(TermQ) clause is still a TermScorer, with the boost folded
-    * into its Bm25 weight). This is exactly the shape MoreLikeThis emits.
+  /** The collectors' planner: which executor answers `q0`. MoreLikeThis
+    * expands to its boosted Should-disjunction first, so it can reach WAND.
+    * The fast paths read postings directly, so pinned delete tombstones
+    * send every query to [[compile]].
     */
-  private def pureShouldWeighted(q: Query): Option[Seq[(String, Float)]] = q match {
-    case TermQ(t) => Some(Seq((t, 1.0f)))
-    case b: BoostQ => weightedLeaf(b).map(Seq(_))
-    case BoolQ(cs, m) if m <= 1 && cs.nonEmpty && cs.forall(_._1 == Occur.Should) =>
-      val leaves = cs.map(c => weightedLeaf(c._2))
-      if (leaves.exists(_.isEmpty)) None
-      else {
-        val ts = leaves.map(_.get)
-        // duplicate Should clauses of one term sum that term's score twice
-        // (`SumCombiner`) — the WAND executor scores each term once, so only
-        // the duplicate-free shape routes here
-        if (ts.map(_._1).distinct.length == ts.length) Some(ts) else None
-      }
-    case _ => None
+  def route(q0: Query): Route = {
+    val q = q0 match {
+      case m: MoreLikeThisQ => mltDisjunction(m, field)
+      case FieldQ(f, m: MoreLikeThisQ) => FieldQ(f, mltDisjunction(m, f))
+      case _ => q0
+    }
+    // the WAND-eligible shape (`boolean_weight.rs:56-76`): every clause a
+    // TermScorer, boosts folded into the weight. Duplicate Should clauses of
+    // one term sum its score twice (`SumCombiner`); WAND scores each term
+    // once, so they stay generic.
+    lazy val shoulds = q match {
+      case BoolQ(cs, m) if m <= 1 && cs.forall(_._1 == Occur.Should) => cs.map(_._2)
+      case _ => Seq(q)
+    }
+    lazy val leaves = shoulds.flatMap(weightedLeaf(_))
+    q match {
+      case _ if deletesDf.isDefined => Route.Generic(q)
+      case p: PhraseQ => Route.Phrase(p)
+      case BoolQ(cs, _) if cs.nonEmpty && cs.forall {
+          case (o, s) => o == Occur.Must && s.isInstanceOf[TermQ] } =>
+        Route.Must(cs.map(_._2.asInstanceOf[TermQ].term))
+      case _ if leaves.nonEmpty && leaves.length == shoulds.length &&
+          leaves.map(_._1).distinct.length == leaves.length => Route.Should(leaves)
+      case _ => Route.Generic(q)
+    }
   }
 
-  /** Collector-level query rewrite: MoreLikeThis expands to its boosted
-    * Should-disjunction BEFORE dispatch, so the top-k collectors see the
-    * WAND-eligible shape instead of falling back to the generic union.
+  /** Runs a routed query under one collector (`collector/mod.rs:165-204`:
+    * per-task fruits, merged on the driver under [[Hit.ordering]]). Returns
+    * (hits, count); hits are empty for Count, and count is meaningful only
+    * for Count and TopKCount.
     */
-  private def rewriteForCollect(q: Query): Query = q match {
-    case m: MoreLikeThisQ => mltDisjunction(m, field)
-    case FieldQ(f, m: MoreLikeThisQ) => FieldQ(f, mltDisjunction(m, f))
-    case _ => q
+  def collect(r: Route, c: Collector): (Array[Hit], Long) = {
+    // TopK's offset is dropped after the merge; Count runs at k = 1
+    val (k, offset) = c match {
+      case Collector.TopK(k, off) => (k + off, off)
+      case Collector.Count => (1, 0)
+      case Collector.TopKCount(k) => (k, 0)
+    }
+    val (hits, count) = (r, c) match {
+      case (Route.Phrase(p), _) => Intersect.topKPhrase(this, p, k)
+      case (Route.Must(terms), _) => Intersect.topKMust(this, terms, k)
+      // a term's hit count IS its doc_freq with no tombstones pinned: the
+      // term dictionary answers without touching postings (the reference's
+      // specialized term count reads the same TermInfo)
+      case (Route.Should(Seq((t, _))), Collector.Count) =>
+        (Array.empty[Hit], docFreqs(Seq(t)).getOrElse(t, 0L))
+      case (Route.Should(termBoosts), _) =>
+        Wand.topK(this, termBoosts, k, withCount = !c.isInstanceOf[Collector.TopK])
+      case (Route.Generic(q), Collector.Count) => (Array.empty[Hit], compile(q).count())
+      case (Route.Generic(q), Collector.TopK(_, _)) =>
+        (compile(q).orderBy(desc("score"), asc("segId"), asc("docId")).limit(k)
+          .collect().map(s => Hit(s.segId, s.docId, s.score)), -1L)
+      case (Route.Generic(q), Collector.TopKCount(_)) =>
+        // one pass over the matches: each partition folds them into a
+        // bounded heap plus a counter (SegmentCollector)
+        Wand.TopK.merge(compile(q).mapPartitions { it =>
+          val top = new Wand.TopK(k)
+          var n = 0L
+          it.foreach { s => n += 1; top.insert(s.segId, s.docId, s.score) }
+          Iterator.single((top.hits, n))
+        }.collect(), k)
+    }
+    (hits.drop(offset), count)
   }
 
   /** TopDocs collector (`top_collector.rs:45-61,102-122`): global top-k by
-    * (score desc, segId asc, docId asc), offset skipped after the merge.
-    * Pure conjunctions and phrases route through the per-segment leapfrog
-    * executor (`Intersect`), weighted pure disjunctions (incl. expanded
-    * MoreLikeThis) through the block-max WAND executor, everything else
-    * through the Dataset pipeline.
+    * [[Hit.ordering]], `offset` hits skipped after the merge.
     */
-  def topDocs(q0: Query, k: Int, offset: Int = 0): Array[Hit] = rewriteForCollect(q0) match {
-    case p: PhraseQ if fastPathEligible =>
-      Intersect.topKPhrase(this, p, k + offset)._1.drop(offset)
-    case q if fastPathEligible && pureMustTerms(q).isDefined =>
-      Intersect.topKMust(this, pureMustTerms(q).get, k + offset)._1.drop(offset)
-    case q if fastPathEligible && pureShouldWeighted(q).isDefined =>
-      Wand.topKWeighted(this, pureShouldWeighted(q).get, k + offset).drop(offset)
-    case q =>
-      compile(q)
-        .orderBy(desc("score"), asc("segId"), asc("docId"))
-        .limit(k + offset)
-        .as[ScoredDoc].collect().drop(offset).map(s => Hit(s.segId, s.docId, s.score))
-  }
+  def topDocs(q: Query, k: Int, offset: Int = 0): Array[Hit] =
+    collect(route(q), Collector.TopK(k, offset))._1
 
   /** Count collector (`count_collector.rs:36-61`). */
-  def count(q0: Query): Long = rewriteForCollect(q0) match {
-    // a term's hit count IS its doc_freq when no tombstones are pinned —
-    // the term dictionary answers without touching postings (the reference's
-    // specialized term count reads the same TermInfo)
-    case TermQ(t) if fastPathEligible => docFreqs(Seq(t)).getOrElse(t, 0L)
-    case p: PhraseQ if fastPathEligible => Intersect.topKPhrase(this, p, 1)._2
-    case q if fastPathEligible && pureMustTerms(q).isDefined =>
-      Intersect.topKMust(this, pureMustTerms(q).get, 1)._2
-    case q if fastPathEligible && pureShouldWeighted(q).isDefined =>
-      Wand.topKWithCountWeighted(this, pureShouldWeighted(q).get, 1)._2
-    case q => compile(q).count()
-  }
+  def count(q: Query): Long = collect(route(q), Collector.Count)._2
 
   /** TopDocs + Count in ONE pass over the matching doc set — the
     * MultiCollector shape (`multi_collector.rs:166`; the reference's
-    * TOP_10_COUNT command of the search-benchmark-game harness). A count
-    * collector needs every match, so the pruned (WAND) path is off; each
-    * partition folds its matches into a bounded k-heap plus a counter
-    * (SegmentCollector), and the driver merges fruits
-    * (`top_collector.rs:102-122`).
+    * TOP_10_COUNT command of the search-benchmark-game harness).
     */
-  def topDocsWithCount(q0: Query, k: Int): (Array[Hit], Long) = rewriteForCollect(q0) match {
-    case p: PhraseQ if fastPathEligible => Intersect.topKPhrase(this, p, k)
-    case q if fastPathEligible && pureMustTerms(q).isDefined =>
-      Intersect.topKMust(this, pureMustTerms(q).get, k)
-    case q if fastPathEligible && pureShouldWeighted(q).isDefined =>
-      Wand.topKWithCountWeighted(this, pureShouldWeighted(q).get, k)
-    case q => topDocsWithCountGeneric(q, k)
-  }
+  def topDocsWithCount(q: Query, k: Int): (Array[Hit], Long) =
+    collect(route(q), Collector.TopKCount(k))
 
-  private def topDocsWithCountGeneric(q: Query, k: Int): (Array[Hit], Long) = {
-    val partials = compile(q).mapPartitions { it =>
-      var cnt = 0L
-      // dequeues the WORST kept hit first: lowest score, then largest address
-      val heap = scala.collection.mutable.PriorityQueue.empty[ScoredDoc](
-        Ordering.by((s: ScoredDoc) => (-s.score, s.segId, s.docId)))
-      it.foreach { s =>
-        cnt += 1
-        if (heap.size < k) heap.enqueue(s)
-        else {
-          val w = heap.head
-          val better = s.score > w.score ||
-            (s.score == w.score && (s.segId < w.segId ||
-              (s.segId == w.segId && s.docId < w.docId)))
-          if (better) { heap.dequeue(); heap.enqueue(s) }
-        }
-      }
-      Iterator.single((heap.toSeq.map(s => (s.segId, s.docId, s.score)), cnt))
-    }.collect()
-    val hits = partials.flatMap(_._1)
-      .map { case (s, d, sc) => Hit(s, d, sc) }
-      .sortBy(h => (-h.score, h.segId, h.docId))
-      .take(k)
-    (hits, partials.map(_._2).sum)
-  }
-
-  /** Top-k for a pure multi-term disjunction through the block-max WAND
-    * executor (the reference's pruned path, `block_wand.rs`).
+  /** Top-k for a disjunction of distinct terms — block-max WAND
+    * (`block_wand.rs`) unless tombstones are pinned.
     */
   def topDocsWand(terms: Seq[String], k: Int): Array[Hit] =
-    Wand.topK(this, terms, k)
+    topDocs(BoolQ(terms.distinct.map(t => Occur.Should -> (TermQ(t): Query))), k)
 
   /** Per-segment/per-component space accounting
     * (`space_usage/mod.rs` `Searcher::space_usage` analog).
@@ -960,6 +897,30 @@ object Searcher {
     * non-capturing group keeps alternations intact.
     */
   def anchored(pattern: String): String = s"\\A(?:$pattern)\\z"
+
+  /** The executor [[Searcher.route]] picks for a query. */
+  sealed trait Route
+  object Route {
+    /** A phrase: the positions-aware leapfrog ([[Intersect.topKPhrase]]). */
+    final case class Phrase(q: PhraseQ) extends Route
+    /** All-Must bare terms, in clause order: the leapfrog ([[Intersect.topKMust]]). */
+    final case class Must(terms: Seq[String]) extends Route
+    /** Distinct (term, boost) clauses: block-max WAND ([[Wand.topK]]). */
+    final case class Should(termBoosts: Seq[(String, Float)]) extends Route
+    /** Anything else: the Catalyst pipeline ([[Searcher.compile]]). */
+    final case class Generic(q: Query) extends Route
+  }
+
+  /** What [[Searcher.collect]] gathers from the matches. */
+  sealed trait Collector
+  object Collector {
+    /** The `k` best hits after skipping the first `offset`. */
+    final case class TopK(k: Int, offset: Int = 0) extends Collector
+    /** The number of matches. */
+    case object Count extends Collector
+    /** The `k` best hits and the number of matches, in one pass. */
+    final case class TopKCount(k: Int) extends Collector
+  }
 }
 
 /** Positional phrase matching, replicating the reference's

@@ -85,24 +85,37 @@ object Wand {
     }
   }
 
-  /** Per-segment top-k accumulator with the reference's threshold semantics:
-    * threshold = kth best score once full (Float.MinValue before), WAND
-    * accepts strictly greater scores only, docs arrive in ascending docId so
-    * threshold-tied earlier (lower) docIds are kept — matching the
-    * (score desc, docId asc) tie order of `top_collector.rs:45-61`.
+  /** Bounded top-k heap under [[Hit.ordering]] — the per-task collector of
+    * every executor. threshold = the kth best score once full
+    * (Float.MinValue before). A hit is kept only if it ranks strictly before
+    * the worst kept one, so with docs arriving in ascending docId a
+    * threshold-tied later doc is rejected — the strict `>` of
+    * `block_wand.rs:206` and the tie order of `top_collector.rs:45-61`.
     */
-  final class TopK(k: Int, segId: Int) {
-    // min-heap: head = lowest score; among ties, the HIGHEST docId (evict it first)
-    private val heap = scala.collection.mutable.PriorityQueue.empty[Hit](
-      Ordering.by((h: Hit) => (-h.score, h.docId)))
+  final class TopK(k: Int) {
+    // head = the worst kept hit (the maximum under the collector order)
+    private val heap = scala.collection.mutable.PriorityQueue.empty[Hit](Hit.ordering)
     def threshold: Float = if (heap.size < k) Float.MinValue else heap.head.score
-    /** callback(doc, score) -> new threshold (`block_wand.rs:148-212`). */
-    def insert(doc: Int, score: Float): Float = {
+    /** Offer one hit; returns the new threshold (the WAND callback,
+      * `block_wand.rs:148-212`).
+      */
+    def insert(segId: Int, doc: Int, score: Float): Float = {
       if (heap.size < k) heap.enqueue(Hit(segId, doc, score))
-      else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(segId, doc, score)) }
+      else if (Hit.compare(score, segId, doc, heap.head) < 0) {
+        heap.dequeue(); heap.enqueue(Hit(segId, doc, score))
+      }
       threshold
     }
-    def hits: Array[Hit] = heap.toArray
+    def hits: Seq[Hit] = heap.toSeq
+  }
+
+  object TopK {
+    /** Driver merge of per-task (hits, count) fruits
+      * (`top_collector.rs:102-122`): the global top-k under [[Hit.ordering]]
+      * and the summed count.
+      */
+    def merge(fruits: Array[(Seq[Hit], Long)], k: Int): (Array[Hit], Long) =
+      (fruits.flatMap(_._1).sorted.take(k), fruits.map(_._2).sum)
   }
 
   /** `find_pivot_doc` (`block_wand.rs:16-43`): scorers sorted by doc; pivot =
@@ -250,66 +263,59 @@ object Wand {
     }
   }
 
-  /** Distributed top-k disjunction: one WAND run per segment group, driver
-    * merge with (score desc, segId asc, docId asc) (`top_collector.rs:102-122`).
+  /** Distributed top-k of a weighted term disjunction — the one WAND entry:
+    * one BMW run per segment group, driver merge (`top_collector.rs:102-122`).
+    * Each term's boost folds into its Bm25 weight (`bm25.rs:80-87
+    * boost_by`), which is how the reference makes `Should(Boost(Term))`
+    * trees (MoreLikeThis's shape) WAND-eligible (`boolean_weight.rs:56-76`):
+    * a boosted TermScorer is still a TermScorer, its max_score just scales
+    * with the boost, so every pruning bound stays sound. An unboosted term
+    * is boost 1.0f, and `w * 1.0f` is exact.
+    *
+    * Returns (hits, count). With `withCount` the count is the union's match
+    * count (0 otherwise): a count collector must see every match
+    * (`multi_collector.rs:166`), so the threshold probe stays off and the
+    * union is counted inside the same per-segment tasks that run the BMW
+    * loop — a linear merge over the already-assembled sorted docId lists,
+    * instead of a second groupBy-shuffle over per-doc rows. Boosts don't
+    * change which docs match, so the count is boost-free. `probeCutoff` and
+    * `chunkDocs` are there for tests.
     */
-  def topK(searcher: Searcher, terms: Seq[String], k: Int,
-           probeCutoff: Long = 20000000L): Array[Hit] = {
-    val weights = searcher.weightsFor(terms)
-    if (weights.isEmpty || k <= 0) return Array.empty
-    val present = terms.distinct.filter(weights.contains).sorted
-    topKImpl(searcher, present, weights, k, probeCutoff)
-  }
-
-  /** [[topK]] for a WEIGHTED disjunction — each term's clause boost folded
-    * into its Bm25 weight (`bm25.rs:80-87 boost_by`), which is how the
-    * reference makes `Should(Boost(Term))` trees (MoreLikeThis's shape)
-    * WAND-eligible (`boolean_weight.rs:56-76`): a boosted TermScorer is
-    * still a TermScorer, its max_score just scales with the boost, so every
-    * pruning bound below stays sound.
-    */
-  def topKWeighted(searcher: Searcher, termBoosts: Seq[(String, Float)], k: Int,
-                   probeCutoff: Long = 20000000L): Array[Hit] = {
-    val weights = searcher.weightsForBoosted(termBoosts)
-    if (weights.isEmpty || k <= 0) return Array.empty
-    val present = termBoosts.map(_._1).distinct.filter(weights.contains).sorted
-    topKImpl(searcher, present, weights, k, probeCutoff)
-  }
-
-  /** [[topKWithCount]] for a weighted disjunction (boosts don't change
-    * which docs match, only their scores — the union count is boost-free).
-    */
-  def topKWithCountWeighted(searcher: Searcher, termBoosts: Seq[(String, Float)],
-                            k: Int): (Array[Hit], Long) = {
+  def topK(searcher: Searcher, termBoosts: Seq[(String, Float)], k: Int,
+           withCount: Boolean = false,
+           probeCutoff: Long = 20000000L,
+           chunkDocs: Int = DefaultChunkDocs): (Array[Hit], Long) = {
     val weights = searcher.weightsForBoosted(termBoosts)
     val present = termBoosts.map(_._1).distinct.filter(weights.contains).sorted
-    if (present.isEmpty || k <= 0) return (Array.empty, 0L)
-    if (present.length == 1) {
-      val cnt = searcher.docFreqs(present).getOrElse(present.head, 0L)
-      return (topKImpl(searcher, present, weights, k, Long.MaxValue), cnt)
-    }
-    multiTerm(searcher, present, weights, k, tau = Float.MinValue, withCount = true)
-  }
-
-  /** TOP_10_COUNT for a pure disjunction in ONE pass: the count collector
-    * must see every match (`multi_collector.rs:166`), so the map-side
-    * threshold prefilter stays off, but the union COUNT is computed inside
-    * the same per-segment task that runs the BMW loop — a linear merge over
-    * the already-assembled sorted docId lists — instead of a second
-    * groupBy-shuffle over per-doc rows (measured 300-470 ms -> the cost of
-    * the plain TOP_10 disjunction).
-    */
-  def topKWithCount(searcher: Searcher, terms: Seq[String], k: Int): (Array[Hit], Long) = {
-    val weights = searcher.weightsFor(terms)
-    val present = terms.distinct.filter(weights.contains).sorted
-    if (present.isEmpty || k <= 0) return (Array.empty, 0L)
-    if (present.length == 1) {
+    if (present.isEmpty || k <= 0) (Array.empty, 0L)
+    else if (present.length == 1) {
       // union of one term: count IS its global doc_freq (termdict lookup,
       // no postings touched); hits via the zero-shuffle single-term path
-      val cnt = searcher.docFreqs(present).getOrElse(present.head, 0L)
-      return (topKImpl(searcher, present, weights, k, Long.MaxValue), cnt)
+      val term = present.head
+      val cnt = if (withCount) searcher.docFreqs(present).getOrElse(term, 0L) else 0L
+      (singleTerm(searcher, term, weights(term), k), cnt)
+    } else {
+      // For high-df disjunctions, probe an initial threshold before
+      // shuffling: τ = nextDown(k-th best score of the highest-max-score
+      // term alone, via the zero-shuffle single-term path). A block of term
+      // t can only hold a doc scoring > τ if blockMax_t + Σ_{u≠t} termMax_u
+      // > τ, so hopeless blocks are dropped MAP-SIDE before the shuffle —
+      // the distributed analog of BMW's "skip without decoding". Soundness:
+      // every true top-k doc's full score ≥ its single-term scores, so the
+      // true k-th best ≥ θ0; nextDown keeps θ0-tied docs eligible,
+      // preserving the strict-`>` threshold and (score, docId) tie
+      // semantics. The probe costs one extra job, so it only arms above a
+      // df cutoff where shuffle volume dominates. It ranks by THIS query's
+      // (boosted) weights, or its k-th score would not bound the sums.
+      var tau = Float.MinValue
+      if (!withCount && searcher.docFreqs(present).values.sum > probeCutoff) {
+        val probeTerm = present.maxBy(t => weights(t).maxScore)
+        val probeHits = singleTerm(searcher, probeTerm, weights(probeTerm), k)
+        if (probeHits.length == k)
+          tau = java.lang.Math.nextDown(probeHits.last.score)
+      }
+      multiTerm(searcher, present, weights, k, tau, withCount, chunkDocs)
     }
-    multiTerm(searcher, present, weights, k, tau = Float.MinValue, withCount = true)
   }
 
   /** Count of distinct docIds across sorted lists (union cardinality). */
@@ -338,68 +344,38 @@ object Wand {
     cnt
   }
 
-  private def topKImpl(searcher: Searcher, present: Seq[String],
-                       weights: Map[String, Bm25.Weight], k: Int,
-                       probeCutoff: Long): Array[Hit] = {
+  /** Single-term specialization with ZERO shuffle: per-doc scoring makes a
+    * term's top-k decomposable over ANY partition of its posting list
+    * (chunk top-ks ∪-merge to the global top-k), so each scan partition
+    * runs `blockWandSingle` over the complete (segId-grouped) block runs it
+    * holds and ships only its k best. One stage, pruned scan, driver merge —
+    * the scan IS the reference's skip-capable read; no posting bytes cross
+    * the network beyond k hits per task.
+    */
+  private def singleTerm(searcher: Searcher, term: String, w: Bm25.Weight,
+                         k: Int): Array[Hit] = {
     val spark = searcher.spark
     import spark.implicits._
-    if (present.isEmpty) return Array.empty
-
-    // Single-term specialization with ZERO shuffle: per-doc scoring makes a
-    // term's top-k decomposable over ANY partition of its posting list
-    // (chunk top-ks ∪-merge to the global top-k), so each scan partition
-    // runs `blockWandSingle` over the complete (segId-grouped) block runs it
-    // holds and ships only its k best. One stage, pruned scan, driver merge —
-    // the scan IS the reference's skip-capable read; no posting bytes cross
-    // the network beyond k hits per task.
-    if (present.length == 1) {
-      val term = present.head
-      val w = weights(term)
-      val rows = searcher.postings
-        .where(col("field") === searcher.field && col("term") === term)
-        .select($"segId", $"blockId", $"lastDoc", $"maxNormId", $"maxTf",
-          $"docIds", $"tfs", $"normIds")
-        .as[(Int, Int, Int, Int, Int, Array[Int], Array[Int], Array[Int])]
-      val fruits = rows.mapPartitions { it =>
-        val bySeg = scala.collection.mutable.Map.empty[Int,
-          scala.collection.mutable.ArrayBuffer[(Int, Block)]]
-        it.foreach { case (segId, blockId, lastDoc, mN, mT, ds, tfs, ns) =>
-          bySeg.getOrElseUpdate(segId, scala.collection.mutable.ArrayBuffer.empty) +=
-            ((blockId, Block(lastDoc, mN, mT, ds, tfs, ns)))
-        }
-        bySeg.iterator.flatMap { case (segId, blks) =>
-          val scorer = new TermScorer(w, blks.sortBy(_._1).map(_._2).toArray)
-          val topk = new TopK(k, segId)
-          blockWandSingle(scorer, topk.threshold, topk.insert)
-          topk.hits.iterator
-        }.map(h => (h.segId, h.docId, h.score))
-      }.collect()
-      return fruits.map { case (s, d, sc) => Hit(s, d, sc) }
-        .sortBy(h => (-h.score, h.segId, h.docId)).take(k)
-    }
-
-    // For high-df disjunctions, probe an initial threshold before shuffling:
-    // τ = nextDown(k-th best score of the highest-max-score term alone, via
-    // the zero-shuffle single-term path). A block of term t can only hold a
-    // doc scoring > τ if blockMax_t + Σ_{u≠t} termMax_u > τ, so hopeless
-    // blocks are dropped MAP-SIDE before the shuffle — the distributed
-    // analog of BMW's "skip without decoding". Soundness: every true top-k
-    // doc's full score ≥ its single-term scores, so the true k-th best ≥ θ0;
-    // nextDown keeps θ0-tied docs eligible, preserving the strict-`>`
-    // threshold and (score, docId) tie semantics. The probe costs one extra
-    // job, so it only arms above a df cutoff where shuffle volume dominates.
-    val dfs = searcher.docFreqs(present)
-    var tau = Float.MinValue
-    if (dfs.values.sum > probeCutoff) {
-      val probeTerm = present.maxBy(t => weights(t).maxScore)
-      // recurse with THIS query's weights map (not freshly-derived ones):
-      // under a weighted disjunction the probe must rank by the boosted
-      // weight, or its k-th score is not a lower bound for the boosted sums
-      val probeHits = topKImpl(searcher, Seq(probeTerm), weights, k, probeCutoff)
-      if (probeHits.length == k)
-        tau = java.lang.Math.nextDown(probeHits.last.score)
-    }
-    multiTerm(searcher, present, weights, k, tau, withCount = false)._1
+    val rows = searcher.postings
+      .where(col("field") === searcher.field && col("term") === term)
+      .select($"segId", $"blockId", $"lastDoc", $"maxNormId", $"maxTf",
+        $"docIds", $"tfs", $"normIds")
+      .as[(Int, Int, Int, Int, Int, Array[Int], Array[Int], Array[Int])]
+    val fruits = rows.mapPartitions { it =>
+      val bySeg = scala.collection.mutable.Map.empty[Int,
+        scala.collection.mutable.ArrayBuffer[(Int, Block)]]
+      it.foreach { case (segId, blockId, lastDoc, mN, mT, ds, tfs, ns) =>
+        bySeg.getOrElseUpdate(segId, scala.collection.mutable.ArrayBuffer.empty) +=
+          ((blockId, Block(lastDoc, mN, mT, ds, tfs, ns)))
+      }
+      bySeg.iterator.map { case (segId, blks) =>
+        val scorer = new TermScorer(w, blks.sortBy(_._1).map(_._2).toArray)
+        val topk = new TopK(k)
+        blockWandSingle(scorer, topk.threshold, (d, s) => topk.insert(segId, d, s))
+        (topk.hits, 0L)
+      }
+    }.collect()
+    TopK.merge(fruits, k)._1
   }
 
   /** DocId-range width of one multi-term task (see [[multiTerm]]): bounds
@@ -414,7 +390,8 @@ object Wand {
   /** The shared multi-term stage: one pruned scan of the query terms'
     * blocks, one narrow shuffle grouped by (segment, docId-range chunk),
     * per-chunk BMW loop (plus the union count when `withCount`), driver
-    * merge.
+    * merge. Chunk slicing is `Intersect.chunkSpans`, shared with the
+    * leapfrog executor.
     *
     * Chunking is sound because per-doc scores are computed entirely from
     * that doc's block entries: a doc's postings for every term land in the
@@ -429,7 +406,7 @@ object Wand {
   private def multiTerm(searcher: Searcher, present: Seq[String],
                         weights: Map[String, Bm25.Weight], k: Int,
                         tau: Float, withCount: Boolean,
-                        chunkDocs: Int = DefaultChunkDocs): (Array[Hit], Long) = {
+                        chunkDocs: Int): (Array[Hit], Long) = {
     val spark = searcher.spark
     import spark.implicits._
     val wB = spark.sparkContext.broadcast(weights)
@@ -458,23 +435,15 @@ object Wand {
     // slice each block into its docId-range chunk(s); the common case
     // (block entirely inside one chunk) passes the arrays through untouched
     val chunked = rows.flatMap { case (segId, term, blockId, lastDoc, mN, mT, ds, tfs, ns) =>
-      if (ds.isEmpty) Iterator.empty
-      else {
-      val lo = ds(0) / cw
-      val hi = lastDoc / cw
-      if (lo == hi)
-        Iterator.single((segId, lo, term, blockId, Block(lastDoc, mN, mT, ds, tfs, ns)))
-      else (lo to hi).iterator.flatMap { c =>
-        val from = Intersect.lowerBound(ds, c.toLong * cw)
-        val until = Intersect.lowerBound(ds, (c + 1).toLong * cw)
-        if (from == until) Iterator.empty
+      Intersect.chunkSpans(ds, cw).map { case (c, from, until) =>
+        if (from == 0 && until == ds.length)
+          (segId, c, term, blockId, Block(lastDoc, mN, mT, ds, tfs, ns))
         else {
-          val d2 = java.util.Arrays.copyOfRange(ds, from, until)
-          Iterator.single((segId, c, term, blockId, Block(d2(d2.length - 1), mN, mT,
-            d2, java.util.Arrays.copyOfRange(tfs, from, until),
-            java.util.Arrays.copyOfRange(ns, from, until))))
+          import java.util.Arrays.copyOfRange
+          val d2 = copyOfRange(ds, from, until)
+          (segId, c, term, blockId, Block(d2(d2.length - 1), mN, mT,
+            d2, copyOfRange(tfs, from, until), copyOfRange(ns, from, until)))
         }
-      }
       }
     }
 
@@ -493,35 +462,18 @@ object Wand {
       val cnt =
         if (withCount)
           unionCount(perTerm.map(_._2.iterator.flatMap(_.docIds).toArray).toArray)
-        else -1L
+        else 0L
       val scorers = perTerm.map { case (term, blks) => new TermScorer(ws(term), blks) }
-      val topk = new TopK(k, segId)
+      val topk = new TopK(k)
       // pre-seed the probe threshold; the callback keeps it as a floor while
       // the heap fills (the heap's own threshold is MinValue until k hits)
-      val cb: (Int, Float) => Float = (d, s) => math.max(tauB, topk.insert(d, s))
+      val cb: (Int, Float) => Float = (d, s) => math.max(tauB, topk.insert(segId, d, s))
       if (scorers.length == 1)
         blockWandSingle(scorers.head, math.max(tauB, topk.threshold), cb)
       else if (scorers.nonEmpty)
         blockWand(scorers, math.max(tauB, topk.threshold), cb)
-      (topk.hits.toSeq.map(h => (h.segId, h.docId, h.score)), cnt)
+      (topk.hits, cnt)
     }.collect()
-
-    val hits = fruits.flatMap(_._1).map { case (s, d, sc) => Hit(s, d, sc) }
-      .sortBy(h => (-h.score, h.segId, h.docId))
-      .take(k)
-    (hits, if (withCount) fruits.map(_._2).sum else -1L)
-  }
-
-  // chunk slicing shares Intersect.lowerBound — one binary search, one
-  // slicing semantics for both executors
-
-  /** Test seam: run the multi-term stage at a forced chunk width. */
-  private[graft] def multiTermForTest(searcher: Searcher, terms: Seq[String], k: Int,
-                                      chunkDocs: Int): (Array[Hit], Long) = {
-    val weights = searcher.weightsFor(terms)
-    val present = terms.distinct.filter(weights.contains).sorted
-    if (present.isEmpty) return (Array.empty, 0L)
-    multiTerm(searcher, present, weights, k, tau = Float.MinValue,
-      withCount = true, chunkDocs = chunkDocs)
+    TopK.merge(fruits, k)
   }
 }

@@ -44,4 +44,11 @@ class BatchTopKSpec extends AnyFunSuite {
     assert(perQid.values.forall(_ <= 3))
     assert(perQid("q_spark") == 3 && !perQid.contains("q_missing"))
   }
+
+  test("duplicate qids are rejected at entry") {
+    assume(haveData)
+    val err = intercept[IllegalArgumentException](
+      Engine.topKBatchF64(sr, Seq("q" -> Seq("spark"), "q2" -> Seq("merge"), "q" -> Seq("merge")), 10))
+    assert(err.getMessage.contains("duplicate qids q"))
+  }
 }

@@ -36,9 +36,10 @@ class ChunkedExecutorSpec extends AnyFunSuite {
 
   test("WAND multi-term: chunked == unchunked at widths 64 and 1") {
     val terms = Seq("alpha", "beta", "gamma")
-    val (h0, c0) = Wand.multiTermForTest(sr, terms, 10, chunkDocs = Int.MaxValue)
+    val (h0, c0) = Wand.topK(sr, terms.map(_ -> 1.0f), 10, withCount = true,
+      chunkDocs = Int.MaxValue)
     for (w <- Seq(64, 1)) {
-      val (h, c) = Wand.multiTermForTest(sr, terms, 10, chunkDocs = w)
+      val (h, c) = Wand.topK(sr, terms.map(_ -> 1.0f), 10, withCount = true, chunkDocs = w)
       assert(norm(h) == norm(h0), s"width $w hits")
       assert(c == c0, s"width $w count")
     }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.bench.CorpusGen
 import graft.index.{Deletes, IndexBuilder, IndexConfig, Manifest}
-import graft.query.{Searcher, TermQ}
+import graft.query.{BoolQ, Hit, Occur, Searcher, TermQ}
 import graft.streaming.StreamIngest
 
 /** Delete tombstones + streaming (micro-batch) ingestion. */
@@ -80,6 +80,26 @@ class DeleteStreamSpec extends AnyFunSuite {
     assert(wand.map(h => (h.segId, h.docId, h.score)).toSeq ==
       exact.map(h => (h.segId, h.docId, h.score)).toSeq)
     assert(expectTop.nonEmpty)
+  }
+
+  test("topDocsWand honors delete tombstones: same answer as topDocs, no deleted doc") {
+    val dir = tmpDir("delwand")
+    val corpus = CorpusGen.corpus(spark, 400)
+    IndexBuilder.build(spark, corpus.toDF(), dir, IndexConfig(numSegments = 3))
+    val victims = new Searcher(spark, dir).compile(TermQ("error")).collect()
+      .map(s => (s.segId, s.docId)).toSet
+    assert(victims.nonEmpty, "corpus must contain the delete term")
+    Deletes.deleteByTerm(spark, dir, "error")
+
+    val sr = new Searcher(spark, dir)
+    val wand = sr.topDocsWand(Seq("val", "def"), 10)
+    val exact = sr.topDocs(BoolQ(Seq(Occur.Should -> TermQ("val"), Occur.Should -> TermQ("def"))), 10)
+    def bits(hits: Array[Hit]) =
+      hits.toSeq.map(h => (h.segId, h.docId, java.lang.Float.floatToIntBits(h.score)))
+    assert(wand.nonEmpty)
+    assert(bits(wand) == bits(exact))
+    assert(wand.forall(h => !victims.contains((h.segId, h.docId))),
+      s"deleted docs returned: ${wand.filter(h => victims.contains((h.segId, h.docId))).toSeq}")
   }
 
   test("micro-batch append commits are isolated, resumable and searchable") {
